@@ -4,8 +4,8 @@
   descendants (the Spark JVM and its Python workers), from ``/proc``.
 - ``RssPeak``: a sampler thread that keeps the peak of that memory.
 - ``StepStats`` / ``StatusProbe.collect_steps``: what Spark's status stores recorded
-  for the jobs of one job group: stage run, CPU and GC time, shuffle and
-  spill bytes, job and task counts, the part of a wall-time window no
+  for the jobs of one job group: stage run, CPU and GC time, shuffle
+  bytes, job and task counts, the part of a wall-time window no
   running stage covered, and the Python-worker SQL metrics of every
   ``MapInPandas`` node.
 """
@@ -18,12 +18,16 @@ import threading
 import time
 from dataclasses import dataclass, fields
 
+from leader_graph_spark.hostload import _tree_pids
+
 _HZ = os.sysconf("SC_CLK_TCK")
 _PAGE = os.sysconf("SC_PAGE_SIZE")
 
 
 def _sweep() -> dict[int, tuple[int, int, int]]:
-    """pid -> (ppid, utime+stime+cutime+cstime jiffies, rss pages)."""
+    """pid -> (ppid, utime+stime+cutime+cstime jiffies, rss pages); the
+    engine's ``hostload`` sweep reads neither the children's times nor
+    the resident size."""
     out = {}
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
@@ -40,19 +44,6 @@ def _sweep() -> dict[int, tuple[int, int, int]]:
     return out
 
 
-def _descendants(sweep: dict[int, tuple[int, int, int]], root: int) -> set[int]:
-    children: dict[int, list[int]] = {}
-    for pid, (ppid, _, _) in sweep.items():
-        children.setdefault(ppid, []).append(pid)
-    out, stack = set(), [root]
-    while stack:
-        for c in children.get(stack.pop(), ()):
-            if c not in out:
-                out.add(c)
-                stack.append(c)
-    return out
-
-
 class ProcTree:
     """CPU and memory of everything this process started.
 
@@ -64,14 +55,14 @@ class ProcTree:
 
     def cpu_s(self) -> float:
         sweep = _sweep()
-        pids = _descendants(sweep, self.root) | {self.root}
+        pids = _tree_pids(sweep, self.root)
         return sum(sweep[p][1] for p in pids if p in sweep) / _HZ
 
     def rss_mb(self) -> float:
         """Resident memory of the descendants; this process is left out,
         so the benchmark's own Python heap does not count."""
         sweep = _sweep()
-        return sum(sweep[p][2] for p in _descendants(sweep, self.root)) * _PAGE / 1e6
+        return sum(sweep[p][2] for p in _tree_pids(sweep, self.root) - {self.root}) * _PAGE / 1e6
 
 
 class RssPeak:
@@ -110,10 +101,8 @@ class StepStats:
     jobs: int = 0
     tasks: int = 0
     shuffle_mb: float = 0.0
-    spill_mb: float = 0.0
     rows_out: int = 0
     py_total_s: float = 0.0
-    py_boot_s: float = 0.0
     py_sent_mb: float = 0.0
     py_received_mb: float = 0.0
 
@@ -124,7 +113,6 @@ class StepStats:
 # MapInPandas SQL metric display name -> StepStats field
 _PY_METRICS = {
     "time to run Python workers": "py_total_s",
-    "time to start Python workers": "py_boot_s",
     "data sent to Python workers": "py_sent_mb",
     "data returned from Python workers": "py_received_mb",
 }
@@ -235,7 +223,6 @@ class StatusProbe:
             st.cpu_s += d.executorCpuTime() / 1e9
             st.gc_s += d.jvmGcTime() / 1e3
             st.shuffle_mb += (d.shuffleReadBytes() + d.shuffleWriteBytes()) / 1e6
-            st.spill_mb += (d.memoryBytesSpilled() + d.diskBytesSpilled()) / 1e6
             if d.submissionTime().isDefined() and d.completionTime().isDefined():
                 a = max(t0, d.submissionTime().get().getTime() / 1e3)
                 b = min(t1, d.completionTime().get().getTime() / 1e3)

@@ -12,7 +12,7 @@ A run is:
 1. set-up, timed as ``setup_s``: write the seeded inputs, start a Spark
    session (this launches the JVM), run one checking pass (every output
    digested for the correctness check; also the cold pass) and
-   the workload's warm-up passes. Each pass's time is printed, so whether
+   ``WARMUPS`` untimed passes. Each pass's time is printed, so whether
    the timed passes run at steady state can be read off the output;
 2. timed passes until ``--seconds`` have gone by, and at least the
    workload's ``passes``; ``run_s`` is their median. With ``--trace 1``,
@@ -49,6 +49,8 @@ WORK = os.path.join(ROOT, ".perfbench_work")
 # collector's run-to-run resizing decisions.
 DRIVER_MEMORY = "2g"
 YOUNG_GEN = "512m"
+# Untimed passes after the cold checking pass, the same for every workload.
+WARMUPS = 1
 
 
 def _prepare_environment() -> None:
@@ -109,6 +111,7 @@ class Runner:
     """Runs one workload's passes on one session and keeps the evidence."""
 
     def __init__(self, spark, workload, in_dir: str, run_id: str) -> None:
+        from perfbench.layers import LAYERS
         from perfbench.probe import ProcTree, StatusProbe
 
         self.run_id = run_id
@@ -116,6 +119,9 @@ class Runner:
         self.workload = workload
         self.in_dir = in_dir
         self.steps = workload.steps(spark, in_dir)
+        self.layers = {step.layer for step in self.steps}
+        if not self.layers <= set(LAYERS):
+            raise ValueError(f"undeclared layers: {sorted(self.layers - set(LAYERS))}")
         self.probe = StatusProbe(spark)
         self.tree = ProcTree()
         self.attempted = 0
@@ -128,7 +134,8 @@ class Runner:
         """One full pass: every step's frames are forced, the checking pass
         through the digest, later passes through a noop sink. Returns wall
         seconds, process-tree CPU seconds, shuffle MB, foreign CPU share
-        and, when traced, the steps' spans."""
+        and, when traced, the steps' spans and the seconds spent reading
+        them."""
         from leader_graph_spark.hostload import HostWindow
 
         self.n += 1
@@ -163,6 +170,7 @@ class Runner:
             wall = time.perf_counter() - t_pass
         sc.setJobGroup("perfbench-idle", "")
         spans = []
+        t_read = time.perf_counter()
         if traced:
             # spans are read from the status stores after the pass, so the
             # traced pass itself only records wall-clock windows
@@ -171,8 +179,10 @@ class Runner:
                 st.rows_out = rows
                 spans.append({"name": step.name, "layer": step.layer, "run": self.run_id,
                               "parent": f"pass-{self.n}", "start": t0, "end": t1, "stats": st})
+        trace_s = time.perf_counter() - t_read
         return {
             "run_s": wall,
+            "trace_s": trace_s,
             "cpu_s": self.tree.cpu_s() - cpu0,
             "shuffle_mb": self.probe.pass_shuffle_mb([w[1] for w in windows]),
             "foreign_frac": host.foreign_frac,
@@ -203,7 +213,7 @@ def _setup(workload, seed: int, run_id: str):
     spark = get_spark("perfbench")
     runner = Runner(spark, workload, in_dir, run_id)
     times = [runner.run_pass(check=True)["run_s"]]
-    times += [runner.run_pass()["run_s"] for _ in range(workload.warmups)]
+    times += [runner.run_pass()["run_s"] for _ in range(WARMUPS)]
     return runner, time.perf_counter() - t0, times
 
 
@@ -266,7 +276,8 @@ def main(argv: list[str] | None = None) -> int:
         print(f"FAILED {f}")
 
     if args.trace:
-        metrics = _layer_metrics(passes, ratios, run_id)
+        metrics = _layer_metrics(passes, ratios, runner.layers)
+        _print_spans(passes, run_id)
         _write_spans(passes, f"{args.workload}-seed{args.seed}-{run_id}")
     else:
         metrics = {
@@ -290,14 +301,19 @@ def main(argv: list[str] | None = None) -> int:
     return 0 if failed == 0 else 1
 
 
-def _layer_metrics(passes: list[dict], ratios: dict[str, float], run_id: str) -> dict:
-    """Per-layer figures: for each declared metric, the median over traced
-    passes of that layer's per-pass total; layers this workload does not
-    call read 0."""
-    from perfbench.layers import LAYER_METRICS
+def _layer_metrics(passes: list[dict], ratios: dict[str, float], called: set[str]) -> dict:
+    """Per-layer figures, every declared metric.
+
+    For a layer this workload calls, each measure is the median over
+    traced passes of that layer's per-pass total, and each ratio comes
+    from the workload's ``ratios``. A layer the workload does not call
+    reads 0 on every measure, ratios included: no time, no jobs, no
+    rows. ``trace.overhead_s`` is the time a traced pass adds, reading
+    its spans from the status stores; the work inside the pass is the
+    same as in an untraced pass."""
+    from perfbench.layers import LAYER_METRICS, layer_of
 
     traced = [p for p in passes if p["traced"]]
-    plain = [p for p in passes if not p["traced"]]
     per_pass = []
     for p in traced:
         totals: dict[str, float] = {}
@@ -308,20 +324,40 @@ def _layer_metrics(passes: list[dict], ratios: dict[str, float], run_id: str) ->
         per_pass.append(totals)
     out = {}
     for name, unit in LAYER_METRICS.items():
-        if name in ratios:
-            out[name] = (ratios[name], unit)
-        elif name == "trace.overhead_s":
-            out[name] = (statistics.median(p["run_s"] for p in traced)
-                         - statistics.median(p["run_s"] for p in plain), unit)
+        if name == "trace.overhead_s":
+            value = statistics.median(p["trace_s"] for p in traced)
+        elif unit == "ratio":
+            value = ratios.get(name, 0.0)
+        elif layer_of(name) in called:
+            value = statistics.median(t.get(name, 0.0) for t in per_pass)
         else:
-            out[name] = (statistics.median(t.get(name, 0.0) for t in per_pass), unit)
-    for span in traced[0]["spans"]:
-        st = span["stats"]
-        print(f"span {span['name']} ({span['layer']}): {st.s:.3f} s, {st.jobs} jobs, "
-              f"driver_gap_s {st.driver_gap_s:.3f}, py_total_s {st.py_total_s:.3f}")
-    print(f"trace run {run_id}: {sum(len(p['spans']) for p in traced)} spans over "
-          f"{len(traced)} traced passes")
+            value = 0.0
+        out[name] = (value, unit)
     return out
+
+
+def _print_spans(passes: list[dict], run_id: str) -> None:
+    """Each step's median seconds and share of the traced passes' wall
+    time, and the same for its Python-worker time (summed over tasks, so
+    it can exceed the step's wall time when tasks run in parallel)."""
+    traced = [p for p in passes if p["traced"]]
+    run_s = statistics.median(p["run_s"] for p in traced)
+    by_step: dict[str, list] = {}
+    for p in traced:
+        for span in p["spans"]:
+            by_step.setdefault(span["name"], []).append(span)
+    print(f"traced passes: median {run_s:.3f} s; per step: median s, share of the pass, "
+          "py_total_s and its share, jobs, driver_gap_s")
+    for name, spans in by_step.items():
+        s = statistics.median(sp["stats"].s for sp in spans)
+        py = statistics.median(sp["stats"].py_total_s for sp in spans)
+        jobs = statistics.median(sp["stats"].jobs for sp in spans)
+        gap = statistics.median(sp["stats"].driver_gap_s for sp in spans)
+        print(f"span {name} ({spans[0]['layer']}): {s:.3f} s {s / run_s:.1%}, py_total_s "
+              f"{py:.3f} {py / run_s:.1%}, {jobs:g} jobs, driver_gap_s {gap:.3f}")
+    print(f"trace run {run_id}: {sum(len(p['spans']) for p in traced)} spans over "
+          f"{len(traced)} traced passes; median traced minus untraced pass "
+          f"{run_s - statistics.median(p['run_s'] for p in passes if not p['traced']):+.3f} s")
 
 
 def _write_spans(passes: list[dict], stem: str) -> None:

@@ -20,8 +20,8 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
 
 from perfbench import gen, run  # noqa: E402
-from perfbench.layers import LAYER_METRICS  # noqa: E402
-from perfbench.probe import StepStats, parse_sql_metric  # noqa: E402
+from perfbench.layers import LAYER_METRICS, LAYERS, SEAM, layer_of  # noqa: E402
+from perfbench.probe import parse_sql_metric  # noqa: E402
 from perfbench.workloads import (  # noqa: E402
     TPCH_TABLES,
     WORKLOADS,
@@ -76,23 +76,16 @@ def test_every_end_to_end_metric_is_declared():
     assert {w["name"] for w in decl["workloads"]} == set(WORKLOADS)
 
 
-def test_traced_run_emits_every_declared_layer_metric():
+def test_declared_layer_metrics_match_the_workloads():
     declared = {m["name"]: m["unit"] for m in _declared()["per_layer"]}
     assert declared == LAYER_METRICS
     assert len(declared) <= 128
     assert all(NAME_RE.fullmatch(n) for n in declared)
-    stats = StepStats(s=1.0, jobs=3, py_total_s=0.5)
-    passes = [
-        {"traced": False, "run_s": 2.0, "spans": []},
-        {"traced": True, "run_s": 2.5, "spans": [
-            {"name": "kcore_copurchase", "layer": "graph.algorithms.kcore_subgraph",
-             "stats": stats}]},
-    ]
-    ratios = {"operators.llm.structured_extraction.ok_frac": 1.0}
-    out = run._layer_metrics(passes, ratios, "test")
-    assert set(out) == set(declared)
-    assert out["graph.algorithms.kcore_subgraph.jobs"] == (3, "count")
-    assert out["trace.overhead_s"] == (0.5, "s")
+    called = [{s.layer for s in w.steps(None, "")} for w in WORKLOADS.values()]
+    # each step is charged to a declared layer, and each layer is called
+    assert set().union(*called) == set(LAYERS)
+    assert all(layer_of(n) in LAYERS for n, u in declared.items()
+               if u != "ratio" and n != "trace.overhead_s")
 
 
 def test_parse_sql_metric_units():
@@ -149,3 +142,40 @@ def test_python_seam_metrics_are_read_from_the_sql_store(spark):
     assert rows == 200
     assert st.jobs >= 1 and st.tasks >= 1
     assert st.py_total_s > 0 and st.py_sent_mb > 0 and st.py_received_mb > 0
+
+
+_SMALL_INPUTS = {
+    "pipeline_full": lambda d: gen.write_pipeline(d, 11, orgs=6),
+    "graph_queries": lambda d: gen.write_tpch(d, 11, customers=400),
+}
+
+
+def test_traced_pass_of_each_workload_measures_the_layers_it_calls(spark, tmp_path):
+    assert set(_SMALL_INPUTS) == set(WORKLOADS)
+    ratio_names = set()
+    for name, workload in WORKLOADS.items():
+        d = str(tmp_path / name)
+        _SMALL_INPUTS[name](d)
+        runner = run.Runner(spark, workload, d, "test")
+        passes = [runner.run_pass(check=True), runner.run_pass(traced=True)]
+        passes[0]["traced"], passes[1]["traced"] = False, True
+        runner.check_against_duckdb()
+        assert runner.failures == []
+        ratios = workload.ratios(spark, d, runner.rows)
+        assert set(ratios) <= set(LAYER_METRICS)
+        assert all(0 < v <= 1 for v in ratios.values()), ratios
+        ratio_names |= set(ratios)
+        out = run._layer_metrics(passes, ratios, runner.layers)
+        assert set(out) == set(LAYER_METRICS)
+        for layer in runner.layers:
+            for measure in ("s", "jobs", "tasks", "rows_out"):
+                if f"{layer}.{measure}" in out:
+                    assert out[f"{layer}.{measure}"][0] > 0, (name, layer, measure)
+            if layer in SEAM:
+                assert out[f"{layer}.py_total_s"][0] > 0, (name, layer)
+                assert out[f"{layer}.py_sent_mb"][0] > 0, (name, layer)
+        for metric, (value, unit) in out.items():
+            if unit != "ratio" and layer_of(metric) not in runner.layers | {"trace"}:
+                assert value == 0, (name, metric)
+        assert out["trace.overhead_s"][0] > 0
+    assert ratio_names == {n for n, u in LAYER_METRICS.items() if u == "ratio"}

@@ -39,11 +39,10 @@ class Step:
 @dataclass
 class Workload:
     name: str
-    # Warm-up passes after the cold checking pass, and the fewest timed
-    # passes. Both are fixed so every run takes the same path through the
-    # JVM's compilation warm-up; ``passes`` covers ``run_seconds`` on a
-    # quiet 4-core box, so the pass count does not vary from run to run.
-    warmups: int
+    # The fewest timed passes. It is fixed so every run takes the same
+    # path through the JVM's compilation warm-up; it covers
+    # ``run_seconds`` on a quiet 4-core box, so the pass count does not
+    # vary from run to run.
     passes: int
     generate: Callable[[str, int], dict]
     steps: Callable[[SparkSession, str], list[Step]]
@@ -94,8 +93,6 @@ def materialize_ctes(sql: str) -> str:
     """Mark each plain CTE MATERIALIZED: DuckDB 1.0 otherwise inlines a CTE
     at every reference, and the unrolled loop oracles reference each round
     twice, so their plans double per round. Results are unchanged."""
-    if "RECURSIVE" in sql.upper():
-        return sql
     return re.sub(r"\b(\w+) AS \(", r"\1 AS MATERIALIZED (", sql)
 
 
@@ -335,7 +332,6 @@ def _graph_ratios(spark: SparkSession, in_dir: str, rows: dict[str, int]) -> dic
 WORKLOADS = {
     "pipeline_full": Workload(
         "pipeline_full",
-        1,
         3,
         lambda d, seed: gen.write_pipeline(d, seed, orgs=PIPELINE_ORGS),
         _pipeline_steps,
@@ -344,7 +340,6 @@ WORKLOADS = {
     ),
     "graph_queries": Workload(
         "graph_queries",
-        1,
         4,
         lambda d, seed: gen.write_tpch(d, seed, customers=GRAPH_CUSTOMERS),
         _graph_steps,
