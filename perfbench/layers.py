@@ -75,7 +75,7 @@ for _fns, _measures in ((SEAM, SEAM_MEASURES), (LOOPS, LOOP_MEASURES), (PAIRS, P
             LAYER_METRICS[f"{_fn}.{_m}"] = _UNITS[_m]
 del LAYER_METRICS["graph.derived.current_colleague_edges.shuffle_mb"]
 for _fn in FILTERING_PAIRS:
-    LAYER_METRICS[f"{_fn}.pairs_per_candidate"] = "ratio"
+    LAYER_METRICS[f"{_fn}.pairs_per_cand"] = "ratio"
 LAYER_METRICS.update({
     "pipeline.stages.ingest_orgs.s": "s",
     "pipeline.stages.build_graph.s": "s",

@@ -30,7 +30,10 @@ from perfbench.workloads import (  # noqa: E402
     spark_digest,
 )
 
-NAME_RE = re.compile(r"[A-Za-z0-9_.-]+")
+# BENCHMARK.json limits: names, units and paths
+NAME_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9_.-]{0,63}")
+UNIT_RE = re.compile(r"[A-Za-z0-9_/%.-]{1,16}")
+PATH_RE = re.compile(r"[A-Za-z0-9_./-]{1,200}")
 
 
 def _declared() -> dict:
@@ -74,6 +77,36 @@ def test_every_end_to_end_metric_is_declared():
     assert set(names) == {"run_s", "cpu_s", "peak_rss_mb", "shuffle_mb", "setup_s"}
     assert all(NAME_RE.fullmatch(n) for n in names)
     assert {w["name"] for w in decl["workloads"]} == set(WORKLOADS)
+
+
+def test_benchmark_json_is_within_its_limits():
+    decl = _declared()
+    assert set(decl) == {"command", "paths", "run_seconds", "workloads",
+                         "end_to_end", "per_layer"}
+    assert os.path.getsize(os.path.join(ROOT, "BENCHMARK.json")) <= 64 * 1024
+    assert 1 <= len(decl["command"]) <= 32
+    assert all(isinstance(a, str) and len(a) <= 200 for a in decl["command"])
+    assert 1 <= len(decl["paths"]) <= 16
+    assert all(PATH_RE.fullmatch(p) and not p.startswith("/") and ".." not in p.split("/")
+               for p in decl["paths"])
+    assert isinstance(decl["run_seconds"], int) and 1 <= decl["run_seconds"] <= 60
+    assert 2 <= len(decl["workloads"]) <= 8
+    assert all(set(w) == {"name", "why"} and "\n" not in w["why"] and len(w["why"]) <= 200
+               for w in decl["workloads"])
+    assert 1 <= len(decl["end_to_end"]) <= 16 and 1 <= len(decl["per_layer"]) <= 128
+    for m in decl["end_to_end"]:
+        assert set(m) == {"name", "unit", "better", "bound"}
+        assert 0 < m["bound"] <= 0.25
+    for m in decl["per_layer"]:
+        assert set(m) == {"name", "unit", "better"}
+    metrics = decl["end_to_end"] + decl["per_layer"]
+    assert all(m["better"] in ("lower", "higher") for m in metrics)
+    assert all(UNIT_RE.fullmatch(m["unit"]) for m in metrics)
+    names = [x["name"] for x in decl["workloads"] + metrics]
+    assert len(set(names)) == len(names)
+    assert all(NAME_RE.fullmatch(n) for n in names), [n for n in names if not NAME_RE.fullmatch(n)]
+    assert {"name": "setup_s", "unit": "s", "better": "lower"}.items() <= next(
+        m for m in decl["end_to_end"] if m["name"] == "setup_s").items()
 
 
 def test_declared_layer_metrics_match_the_workloads():

@@ -259,8 +259,8 @@ def _pipeline_ratios(spark: SparkSession, in_dir: str, rows: dict[str, int]) -> 
         "operators.validation.validate_events_reject.valid_frac":
             rows["events"] / (rows["events"] + rows["quarantine"]),
         "operators.llm.structured_extraction.ok_frac": ok / n,
-        "graph.derived.schoolmate_edges.pairs_per_candidate": same_time / rows["schoolmates"],
-        "graph.derived.historical_colleague_edges.pairs_per_candidate":
+        "graph.derived.schoolmate_edges.pairs_per_cand": same_time / rows["schoolmates"],
+        "graph.derived.historical_colleague_edges.pairs_per_cand":
             rows["colleagues_past"] / work_candidates,
     }
 
@@ -324,7 +324,7 @@ def _graph_ratios(spark: SparkSession, in_dir: str, rows: dict[str, int]) -> dic
     finally:
         con.close()
     return {
-        "operators.intervals.interval_overlap_self_join.pairs_per_candidate":
+        "operators.intervals.interval_overlap_self_join.pairs_per_cand":
             rows["flagship_colleagues_interval"] / nation_candidates,
     }
 
