@@ -378,15 +378,24 @@ def symmetrize(edges: DataFrame, *, disjoint_directions: bool = False) -> DataFr
     ``disjoint_directions``: set ONLY when the caller guarantees the
     input is already a DISTINCT edge set whose reversed pairs can never
     collide with it — e.g. a bipartite graph whose src/dst live in
-    disjoint id namespaces (the co-purchase 'c…'→'p…' build). The
-    union of the two directions is then distinct by construction and
-    the final ``distinct()`` — a full shuffle of 2×|edges|, ~25% of
-    kcore_copurchase's total shuffle bytes at sf0.1 — is skipped.
-    Output is identical; flag misuse would DOUBLE duplicate edges, so
-    callers assert the namespace split, not just assume it."""
-    both = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    disjoint id namespaces (the co-purchase 'c…'→'p…' build). The two
+    directions are then distinct by construction and the final
+    ``distinct()`` — a full shuffle of 2×|edges| — is skipped. Output
+    is identical; flag misuse would DOUBLE duplicate edges, so callers
+    assert the namespace split, not just assume it.
+
+    Both directions come from ONE pass over the input (each row
+    explodes into both orientations); a union of two projections would
+    read an exchange that ends the input (the co-purchase ``distinct``)
+    twice."""
+    both = edges.select(
+        F.explode(
+            F.array(
+                F.struct("src", "dst"),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            )
+        ).alias("_e")
+    ).select("_e.src", "_e.dst")
     return both if disjoint_directions else both.distinct()
 
 
@@ -1339,14 +1348,26 @@ def kcore_subgraph(
     result equals the true k-core whenever ``rounds`` ≥ the peel depth
     (the same deterministic-unroll contract as :func:`min_propagation`
     and the LPA oracle; convergence within the registered round count
-    is test-asserted for the shipped data).
+    is test-asserted for the shipped data). With fewer rounds the
+    output is the partly peeled graph: survivors may have degree < k,
+    and vertices left with no edge are dropped.
 
     The k-core is the classic graph-curation filter — vertices with
     enough mutual support to carry neighborhood-based signals
     (link prediction, community features); degree-1 tendrils peel off
-    in cascades. Per round: one vertex-keyed degree count (map-side
-    combinable) and two semi-joins of the edge list against the
-    survivor set, checkpointed — no shuffle beyond the degree key.
+    in cascades.
+
+    Delta-degree peel: the symmetrized edges are checkpointed once and
+    the loop state is the checkpointed degree table (src, deg). A
+    round removes the set R = {deg < k}: it broadcasts R (size-guarded
+    by its observed count), counts each vertex's edges into R — the
+    symmetrized edges semi-joined to R on ``dst``, grouped by ``src``
+    — and subtracts that count from the survivors' degrees. An edge
+    (v, r) with v, r both still in the state is a surviving edge, so
+    the subtraction is exact. The count of R rides the state's own
+    checkpoint job; the loop stops when R is empty (the fixed point —
+    the remaining unrolled rounds would be no-ops), so there is no
+    confirmation round and no terminal re-aggregation.
 
     Returns (id, degree): surviving vertices with their final in-core
     degree."""
@@ -1354,58 +1375,35 @@ def kcore_subgraph(
         symmetrize(edges, disjoint_directions=disjoint_directions),
         n=F.count(F.lit(1)),
     )
-    e, n_edges = sym, seen["n"]
-    with _loop_exec_conf(e.sparkSession, n_edges):
+    low = F.count(F.when(F.col("deg") < k, 1))
+    with _loop_exec_conf(sym.sparkSession, seen["n"]):
+        state, seen = _checkpoint_observed(
+            sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), low=low
+        )
         for _ in range(rounds):
-            # Early exit at the fixed point: peeling is idempotent, so
-            # stopping when a round removes nothing returns EXACTLY what
-            # the remaining unrolled rounds would — the fixed-round oracle
-            # contract is preserved while the engine pays only the peel
-            # depth (measured: the shipped graph converges by round 4 of
-            # 8; rounds 5-8 were pure checkpoint+semi-join overhead, ~2x
-            # of the query at 10x scale). The surviving-edge count rides
-            # the checkpoint job itself (observe) — one action per round.
-            keep = (
-                e.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .where(F.col("deg") >= k)
-                .select("src")
-            )
-            # Survivor set is PROVABLY ≤ n_edges div k rows (each
-            # survivor owns ≥ k of the observed symmetrized edge
-            # rows), so the broadcast guard needs no extra action.
-            # Broadcast semi-joins drop BOTH per-round exchanges of
-            # the edge set (the SMJ re-partitioned all surviving
-            # edges by src and again by dst every round — the
-            # dominant byte term of kcore_copurchase); only the
-            # map-side-combined degree aggregate still shuffles, and
-            # it moves (vertex, partial-count) rows, not edges. A
-            # 100 TB survivor set past the guard keeps the shuffled
-            # path unchanged.
-            kb = _maybe_broadcast(keep, n_edges // max(k, 1))
-            new_e, seen = _checkpoint_observed(
-                e.join(kb, "src", "semi").join(
-                    kb.withColumnRenamed("src", "dst"), "dst", "semi"
-                ),
-                n=F.count(F.lit(1)),
-            )
-            _release(e)
-            e = new_e
-            n_next = seen["n"]
-            if n_next == n_edges:
+            if not seen["low"]:
                 break
-            n_edges = n_next
-        # Checkpoint the SMALL per-vertex output and release the
-        # surviving-edge state: returned lazy, the plan pins the
-        # edge-sized block (120M rows at the x100 replica — the
-        # largest checkpoint in the engine) until the periodic-GC
-        # backstop, and back-to-back runs swing ±45% from the
-        # accumulated storage (round-8 third-decade battery).
-        out = e.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("degree")
-        ).localCheckpoint()
-        _release(e)
-    return out
+            removed = _maybe_broadcast(
+                state.where(F.col("deg") < k).select(F.col("src").alias("dst")),
+                seen["low"],
+            )
+            dec = (
+                sym.join(removed, "dst", "semi")
+                .groupBy("src")
+                .agg(F.count(F.lit(1)).alias("dec"))
+            )
+            nxt, seen = _checkpoint_observed(
+                state.where(F.col("deg") >= k)
+                .join(dec, "src", "left")
+                .select("src", (F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg")),
+                low=low,
+            )
+            _release(state)
+            state = nxt
+    _release(sym)
+    return state.where(F.col("deg") > 0).select(
+        F.col("src").alias("id"), F.col("deg").alias("degree")
+    )
 
 
 def merge_components(

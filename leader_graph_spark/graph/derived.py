@@ -74,10 +74,18 @@ def skew_guarded_self_pairs(
     aliased sides ``a``/``b``; ``ordered=True`` keeps ``a.id < b.id``
     (each unordered pair once), ``False`` keeps ``a.id != b.id``
     (both directions).
+
+    Raises ``ValueError`` when ``saltBuckets`` is not positive (``pmod``
+    by 0 is null, which would silently drop every hot pair) or when
+    ``hotGroupCap`` is negative.
     """
     spark = base.sparkSession
     cap = int(spark.conf.get(PAIR_HOT_CAP_CONF, "100000"))
     k = int(spark.conf.get(PAIR_SALT_CONF, "32"))
+    if k <= 0:
+        raise ValueError(f"{PAIR_SALT_CONF} must be a positive integer, got {k}")
+    if cap < 0:
+        raise ValueError(f"{PAIR_HOT_CAP_CONF} must be >= 0, got {cap}")
     ck = base.localCheckpoint()
     hot = F.broadcast(
         ck.groupBy(F.col(group_col).alias("_hg"))

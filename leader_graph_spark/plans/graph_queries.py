@@ -757,8 +757,10 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     = the deterministic-oracle contract of ``min_propagation``/LPA:
     peeling is monotone and idempotent, equality to the true core
     holds whenever rounds ≥ peel depth (test-asserted: the shipped
-    graph converges by round 4). Per round: one map-side-combinable
-    degree count + two semi-joins, checkpointed."""
+    graph converges by round 4). Delta-degree peel
+    (:func:`kcore_subgraph`): per round the removed vertices are
+    broadcast and only their incident edges are counted off the
+    checkpointed degree state; the loop stops at the fixed point."""
     from leader_graph_spark.graph.algorithms import kcore_subgraph
 
     orders = load_table(spark, sf_dir, "orders")

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from leader_graph_spark.graph.algorithms import connected_components, degrees
@@ -521,6 +522,37 @@ def test_symmetrize_disjoint_directions_identity(spark):
     assert base.exceptAll(fast).count() == 0
     assert fast.exceptAll(base).count() == 0
     assert fast.count() == 8
+
+
+def test_symmetrize_equals_union_form_and_reads_input_once(spark):
+    """``symmetrize`` builds both directions from one pass over its
+    input. Its output equals the two-projection union form — on directed
+    input with reciprocal edges, self-loops and duplicates, under both
+    ``disjoint_directions`` values — and when the input ends in an
+    exchange, that exchange is read once: shuffle read == shuffle
+    write (the union form reads it twice)."""
+    from leader_graph_spark.graph.algorithms import symmetrize
+    from leader_graph_spark.metrics import measure_query
+
+    def union_form(edges, disjoint):
+        both = edges.select("src", "dst").unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        return both if disjoint else both.distinct()
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 3), (1, 2), (4, 4), (3, 1)], "src long, dst long"
+    )
+    for disjoint in (False, True):
+        got = sorted(map(tuple, symmetrize(edges, disjoint_directions=disjoint).collect()))
+        assert got == sorted(map(tuple, union_form(edges, disjoint).collect()))
+
+    bipartite = spark.createDataFrame(
+        [(f"c{i}", f"p{i % 37}") for i in range(2000)], "src string, dst string"
+    ).repartition(4)
+    led = measure_query(spark, lambda: symmetrize(bipartite, disjoint_directions=True))
+    assert led.shuffle_write_bytes > 0
+    assert led.shuffle_read_bytes == led.shuffle_write_bytes
 
 
 def test_iterative_loops_release_superseded_checkpoints(spark):
@@ -1081,8 +1113,8 @@ def test_min_fold_equals_full_outer_fold(spark):
 
 
 def test_kcore_broadcast_and_shuffled_survivor_paths_agree(spark):
-    """kcore_subgraph (r10): the broadcast-guarded survivor semi-joins
-    must return EXACTLY the shuffled path's core (guard forced off via
+    """kcore_subgraph: the broadcast-guarded removed set must return
+    EXACTLY the shuffled path's core (guard forced off via
     broadcastFrontierMaxRows=-1) — same vertices, same degrees."""
     from leader_graph_spark.graph.algorithms import BCAST_FRONTIER_CONF, kcore_subgraph
 
@@ -1155,6 +1187,28 @@ def test_skew_guarded_pairs_hot_key_split_exact(spark):
     finally:
         spark.conf.unset(PAIR_HOT_CAP_CONF)
         spark.conf.unset(PAIR_SALT_CONF)
+
+
+@pytest.mark.parametrize(
+    "conf_name, value",
+    [("saltBuckets", "0"), ("saltBuckets", "-3"), ("hotGroupCap", "-1")],
+)
+def test_skew_guarded_pairs_rejects_bad_confs(spark, conf_name, value):
+    """A non-positive salt-bucket count (``pmod`` by 0 is null and would
+    silently drop every hot pair) or a negative hot-group cap must fail
+    loudly, naming the conf."""
+    from leader_graph_spark.graph.derived import skew_guarded_self_pairs
+
+    conf = f"spark.leader_graph_spark.pairs.{conf_name}"
+    df = spark.createDataFrame([("g", 1), ("g", 2)], "g string, id long")
+    spark.conf.set(conf, value)
+    try:
+        with pytest.raises(ValueError, match=conf):
+            skew_guarded_self_pairs(
+                df, group_col="g", id_col="id", emit=lambda: [F.col("a.id")]
+            )
+    finally:
+        spark.conf.unset(conf)
 
 
 def test_connected_components_driver_and_loop_paths_agree(spark):

@@ -45,11 +45,10 @@ BENCH_BUDGETS: dict[str, tuple[float, int]] = {
     # union-find (round 7): 105 -> 62 and 17 -> 13 driver actions;
     # static-loop execution (round 8) cut the AQE sub-jobs: measured 38
     "incremental_component_merge": (1.3, 48),
-    # tightened after the bipartite symmetrize fast path dropped the
-    # redundant distinct's full shuffle (round 7: 98 -> 70 MB at sf0.1,
-    # 0.8 MB at this smoke scale)
-    # round-8 static-loop scope + terminal degree checkpoint: measured 8
-    "kcore_copurchase": (1.6, 11),
+    # delta-degree peel: the loop carries (vertex, degree) and
+    # subtracts only the removed vertices' edges, with no confirmation
+    # round or terminal re-aggregation; measured 0.19 MB / 7 jobs
+    "kcore_copurchase": (0.4, 9),
     "local_supplier_volume": (0.05, 17),
     "minhash_near_dup_docs": (1.0, 8),
     # round-8 array-form verify trades ~1.5 MB more smoke-scale shuffle
